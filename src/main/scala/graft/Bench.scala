@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs the headline queries (one per operator family) on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line for the driver.
@@ -12,9 +11,10 @@ import org.apache.spark.sql.SparkSession
   * 17–18 measured a 2.55× swing on byte-identical bytecode, wider than any
   * real regression, because a single run folds one-time codegen/JIT compile
   * and host noise into the number. The raw runs (old methodology: run 1 of
-  * each list) are kept in `runs`, and a query that throws is excluded from
-  * the total and listed in `failed` instead of silently contributing its
-  * time-to-failure (pre-r21 behavior).
+  * each list) are kept in `runs`. Every rep that throws prints the query
+  * name and exception to stderr; a query with no successful rep is listed
+  * in `failed`, and then `value` is null, because a query missing from the
+  * sum would read as a faster total.
   *
   * Timed action (also changed r21, guide §1.4): the noop sink
   * (`write.format("noop")`) instead of `.count()` — count() lets the
@@ -26,16 +26,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(cpus)
     // Untimed warmup: file listing, parquet footers, codegen compilation.
     Seq("lineitem", "documents", "embeddings", "events").foreach { t =>
       try graft.sources.Tables.table(spark, sfDir, t).count()
@@ -49,7 +42,10 @@ object Bench {
         val t = try {
           q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
           Some((System.nanoTime() - t0) / 1e9)
-        } catch { case _: Throwable => None }
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] ${q.name}#$i failed: $e")
+          None
+        }
         // Queries may persist() intermediates for intra-query reuse. Drop
         // them between reps: Spark's CacheManager substitutes cached data by
         // logical-plan match, so without this reps 2..n would read rep 1's
@@ -73,7 +69,8 @@ object Bench {
     val runs = ok.map { case (k, v) => "\"" + k + "\":" + v.mkString("[", ",", "]") }
       .mkString("{", ",", "}")
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = ok.map { case (_, v) => median(v) }.sum
+    val total =
+      if (failed.isEmpty) ok.map { case (_, v) => median(v) }.sum.toString else "null"
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""runs":$runs,"reps":$reps,"failed":$failedJson,"sf":"$sfDir"}""")
     spark.stop()

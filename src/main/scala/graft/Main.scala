@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.lda.LdaPipeline
 
@@ -34,16 +33,8 @@ object Main {
       sys.exit(1)
     }
 
-    val spark = SparkSession.builder()
-      .appName("graft-lda")
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(sys.env.getOrElse("SPARK_MASTER", "local[8]"),
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
 
     // T2: top-10 corpus words preview (py:57)
     println("Top 10 corpus words (word, count):")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Measurement harness (optimization guide §1): times each named catalog
   * query `reps` times in one session so one-time costs (codegen compile,
@@ -10,19 +9,12 @@ import org.apache.spark.sql.SparkSession
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val reps = args.headOption.map(_.toInt).getOrElse(3)
     val names =
       if (args.length > 1) args.drop(1).toSeq
       else Catalog.all.filter(_.headline).map(_.name)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(cpus)
     Seq("lineitem", "documents", "embeddings", "events").foreach { t =>
       try graft.sources.Tables.table(spark, sfDir, t).count()
       catch { case _: Throwable => () }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Output-identity snapshot: collects named catalog queries and writes one
   * row-per-line text file per query, for bit-identity diffs across an
@@ -16,15 +15,8 @@ object Snap {
       if (args.length > 2) args.drop(2).toSeq
       else Seq("lda_topics", "lda_doc_topics", "gibbs_topics",
         "dedup_minhash_lsh", "sim_ivf_topk", "mm_decode_features")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession(cpus)
     names.foreach { n =>
       val out = Catalog.byName(n).run(spark, sfDir)
         .collect().map(_.toString).mkString("\n")

@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** F5+F6+trim+F7 of the cleaning chain fused into ONE byte-level pass
@@ -13,8 +9,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *                             "\\s+", " ")))
   *
   * traverses (and reallocates) the string four times, twice through the
-  * regex engine. This expression produces the identical result in a single
-  * pass with one output buffer.
+  * regex engine. `fold` (the `Natives.alphaSpaceLower` column) produces
+  * the identical result in a single pass with one output buffer.
   *
   * Equivalence proof, for ARBITRARY input (pinned by a CleaningSpec test
   * and a NativeOpsProps property against the built-in composition):
@@ -30,28 +26,6 @@ import org.apache.spark.unsafe.types.UTF8String
   *    first letter (trim-left) and never after the last (trim-right);
   *    deleted chars do NOT produce a space, exactly like F5's deletion.
   */
-case class AlphaSpaceLower(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "alpha_space_lower"
-
-  override def nullSafeEval(input: Any): Any =
-    AlphaOps.fold(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.AlphaOps.fold($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): AlphaSpaceLower =
-    copy(child = newChild)
-}
-
-object AlphaSpaceLower {
-  /** Column wrapper for the DataFrame API. */
-  def apply(c: Column): Column =
-    GraftColumnBridge.column(AlphaSpaceLower(GraftColumnBridge.expression(c)))
-}
-
-/** Static helper invoked from generated code. */
 object AlphaOps {
 
   def fold(in: UTF8String): UTF8String = {

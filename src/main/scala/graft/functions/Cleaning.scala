@@ -16,21 +16,8 @@ object Cleaning {
 
   /** F1 — emoji-token removal (py:122-125). The reference drops the WHOLE
     * whitespace-token if it contains any emoji codepoint, not just the emoji
-    * char. Expressed as a higher-order `filter` over `split` — array lambdas
-    * are codegen-friendly and keep exact drop-the-token semantics. */
-  private val EmojiClass =
-    "[\\x{1F300}-\\x{1FAFF}\\x{2600}-\\x{27BF}\\x{1F000}-\\x{1F02F}" +
-      "\\x{1F0A0}-\\x{1F0FF}\\x{1F100}-\\x{1F1FF}\\x{1F200}-\\x{1F2FF}" +
-      "\\x{2190}-\\x{21FF}\\x{2B00}-\\x{2BFF}\\x{FE00}-\\x{FE0F}\\x{200D}]"
-
-  /** Production form: the native codegen Expression (no per-token regex). */
-  def removeEmojiTokens(c: Column): Column = EmojiStripTokens(c)
-
-  /** Built-in-only form, kept for the Expression-equivalence test. */
-  def removeEmojiTokensHof(c: Column): Column =
-    array_join(
-      filter(split(c, "\\s+"), t => !(t rlike EmojiClass)),
-      " ")
+    * char; the native call does it in one pass (see EmojiOps). */
+  def removeEmojiTokens(c: Column): Column = Natives.emojiStripTokens(c)
 
   /** F2 — URL removal: re.sub(r'http\S+','') (py:128-130). */
   def removeUrls(c: Column): Column = regexp_replace(c, "http\\S+", "")
@@ -77,19 +64,13 @@ object Cleaning {
 
   /** The full composed pipeline in the reference's exact order F1→F7
     * (py:158-164). One Column expression — Catalyst folds it into the scan
-    * projection. F2→F4 run as the native UrlUserCovidStrip passes and the
+    * projection. F2→F4 run as the native urlUserCovidStrip passes and the
     * F5→F6→trim→F7 tail is fused into the single-pass native
-    * AlphaSpaceLower expression (equivalence proofs in their scaladocs;
+    * alphaSpaceLower call (equivalence proofs on NoiseOps and AlphaOps;
     * pinned against the built-in composition by CleaningSpec and
     * NativeOpsProps). */
   def cleanText(c: Column): Column =
-    AlphaSpaceLower(UrlUserCovidStrip(removeEmojiTokens(c)))
-
-  /** Built-in-only form of the F5→F7 tail composition, kept for the
-    * Expression-equivalence test. */
-  def cleanTextBuiltins(c: Column): Column =
-    toLower(collapseWhitespace(keepAlphaWhitespace(
-      removeWords(removeUsernames(removeUrls(removeEmojiTokensHof(c)))))))
+    Natives.alphaSpaceLower(Natives.urlUserCovidStrip(removeEmojiTokens(c)))
 
   /** The SINGLE DuckDB-SQL mirror of cleanText, used by every oracle that
     * needs cleaned text (TextOps + Dedup share this constant so the mirrors

@@ -1,52 +1,27 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.DataType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** F1 — emoji-token removal as a native Catalyst expression with codegen
+/** F1 — emoji-token removal as a native per-row call with codegen
   * (SURVEY §4.3 / §7.4: "custom Expression preferred for codegen").
   *
   * Semantics (exactly the reference's remove_emoji,
   * /root/reference/src/ExtractTwitterData.py:122-125, and bit-equal to the
-  * higher-order-function form in Cleaning.removeEmojiTokens): split on
+  * higher-order-function reference form in CleaningSpec): split on
   * whitespace runs, drop every token containing ANY emoji codepoint, join
   * the survivors (including empty edge tokens, as split keeps them) with a
   * single space.
   *
-  * Why an Expression: the HOF form (filter + rlike lambda) executes an
-  * interpreted regex per token; this compiles to one static call inside
-  * WholeStageCodegen with a branch-free codepoint range check — no regex,
-  * no lambda interpreter, no per-token UTF8String allocation.
+  * Why native: the HOF form (filter + rlike lambda) executes an
+  * interpreted regex per token; `Natives.emojiStripTokens` compiles to one
+  * static call inside WholeStageCodegen with a branch-free codepoint range
+  * check — no regex, no lambda interpreter, no per-token UTF8String
+  * allocation.
   */
-case class EmojiStripTokens(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = child.dataType
-  override def prettyName: String = "emoji_strip_tokens"
-
-  override def nullSafeEval(input: Any): Any =
-    EmojiOps.strip(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.EmojiOps.strip($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): EmojiStripTokens =
-    copy(child = newChild)
-}
-
-object EmojiStripTokens {
-  /** Column wrapper for the DataFrame API. */
-  def apply(c: Column): Column =
-    GraftColumnBridge.column(EmojiStripTokens(GraftColumnBridge.expression(c)))
-}
-
-/** Static helper invoked from generated code (scalac emits a static
-  * forwarder, so `graft.functions.EmojiOps.strip(...)` is valid Java). */
 object EmojiOps {
 
-  /** Codepoint ranges mirrored from Cleaning.EmojiClass. */
+  /** Codepoint ranges mirrored by the regex class of CleaningSpec's
+    * reference form. */
   def isEmoji(cp: Int): Boolean =
     (cp >= 0x1F300 && cp <= 0x1FAFF) || (cp >= 0x2600 && cp <= 0x27BF) ||
     (cp >= 0x1F000 && cp <= 0x1F02F) || (cp >= 0x1F0A0 && cp <= 0x1F0FF) ||

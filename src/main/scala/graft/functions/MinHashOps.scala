@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** The 16-permutation MinHash signature of a shingle set, in ONE pass over
   * the row's array (guide §2.4 — remove shuffles outright).
@@ -12,34 +8,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * The previous formulation exploded every shingle, hashed it, and ran a
   * 16-min groupBy(doc_id) — a full shuffle of the exploded hash stream
   * (O(shingles) rows) just to regroup values that already sat together in
-  * one row's array. This expression computes the identical mins per row:
+  * one row's array. `sig` computes the identical mins per row:
   * min_j over g in sh of ((2j+1)·strHash31(g) + j·40503) % (2^31−1),
   * exactly the exploded form's aggregate (min is order-independent, the
   * hashes are exact integers, and `sh` is the same distinct set), so the
   * signatures are bit-identical and the groupBy exchange disappears from
   * the plan. h < 2^31 so (2j+1)·h + j·40503 < 2^36 — no Long overflow. */
-case class MinHashSig(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig"
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashOps.sig(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MinHashOps.sig($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-}
-
-object MinHashSig {
-  /** Column wrapper for the DataFrame API. */
-  def apply(c: Column): Column =
-    GraftColumnBridge.column(MinHashSig(GraftColumnBridge.expression(c)))
-}
-
-/** Static helper invoked from generated code. */
 object MinHashOps {
   private val P = 2147483647L
 

@@ -1,12 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** F2→F3→F4 of the cleaning chain as ONE native expression (optimization
+/** F2→F3→F4 of the cleaning chain as ONE native call (optimization
   * guide §1.2 step 2 — per-task work): three sequential byte-level passes
   * replacing three java.util.regex replaceAll passes
   *
@@ -32,28 +28,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * the pass. Pinned by a NativeOpsProps property against the regex
   * composition and CleaningSpec's bit-equality test of the whole chain.
   */
-case class UrlUserCovidStrip(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "url_user_covid_strip"
-
-  override def nullSafeEval(input: Any): Any =
-    NoiseOps.strip(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.NoiseOps.strip($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): UrlUserCovidStrip =
-    copy(child = newChild)
-}
-
-object UrlUserCovidStrip {
-  /** Column wrapper for the DataFrame API. */
-  def apply(c: Column): Column =
-    GraftColumnBridge.column(UrlUserCovidStrip(GraftColumnBridge.expression(c)))
-}
-
-/** Static helper invoked from generated code. */
 object NoiseOps {
 
   /** Java-regex \s (ASCII); multibyte bytes are negative → non-whitespace. */

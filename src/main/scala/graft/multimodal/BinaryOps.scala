@@ -84,14 +84,14 @@ object BinaryOps {
     // the video-frame / audio-chunk sampling shape, deterministic fake).
     Q(
       "mm_frame_sample",
-      // Native FrameSample (guide §4.1): the lambda form re-evaluated the
+      // Native frameSample (guide §4.1): the lambda form re-evaluated the
       // payload→string cast per element and paid an O(char-index) substring
       // scan per frame — O(n²/16) per row; this is one pass per row. Same
       // count (ceil(chars/16)), same code points, and an empty payload
       // yields the empty array exactly like the old byte_len = 0 CASE arm.
       (s, dir) => mediaTable(s, dir)
         .select(col("doc_id"),
-          posexplode(graft.functions.FrameSample(col("payload").cast("string"))))
+          posexplode(graft.functions.Natives.frameSample(col("payload").cast("string"))))
         .select(col("doc_id"), col("pos").cast("long").as("frame_idx"),
           col("col").cast("long").as("frame_byte"))
         .orderBy(col("doc_id"), col("frame_idx")),

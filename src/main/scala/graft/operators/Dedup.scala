@@ -35,7 +35,7 @@ object Dedup {
   /** Shared oracle mirror of the cleaning chain (see Cleaning.CleanTextSql). */
   private val cleanSql: String = Cleaning.CleanTextSql
 
-  /** DuckDB mirror of the native StrHash31 expression (graft.functions):
+  /** DuckDB mirror of the native strHash31 (graft.functions.TokenOps):
     * weighted character-code sum × Knuth multiplier mod a Mersenne prime.
     * Keep in lockstep with TokenOps.strHash31. */
   private def wordHashSql(wordCol: String): String =
@@ -112,14 +112,18 @@ object Dedup {
         // Persisted LAZILY, on purpose (r22 measured both ways): the clean-
         // chain projection feeds both self-join sides and the sizes table —
         // without the cache the cleaning chain runs 3× per doc (guide §2.4 /
-        // §5). Eager materialization (Tables.matPersist) was tried and
-        // REVERTED here: once the cache is materialized its InMemoryRelation
-        // reports its true (large) size, the planner switches the tok
-        // self-join from broadcast-hash to sort-merge, and the join output
-        // loses the doc-partitioning the downstream (d1,d2) partial agg
-        // relies on — partial-agg output exploded 62M → 697M rows (100 GB
-        // spill), 80 s → 270 s at the 10× fixture. The concurrent-stage
-        // cache race matPersist fixes costs far less than that here.
+        // §5). Eager materialization (persist, then a noop write before
+        // use) was tried and REVERTED here: once the cache is materialized
+        // its InMemoryRelation reports its true (large) size, the planner
+        // switches the tok self-join from broadcast-hash to sort-merge, and
+        // the join output loses the doc-partitioning the downstream (d1,d2)
+        // partial agg relies on — partial-agg output exploded 62M → 697M
+        // rows (100 GB spill), 80 s → 270 s at the 10× fixture. What eager
+        // materialization avoids is the concurrent-stage cache race: the
+        // consumers of a lazy persist start as concurrent stages whose tasks
+        // contend for the same cache blocks' write locks (text_doc_term at
+        // the 10× fixture, local[32]: lazy 2.2–8.1 s bimodal, eager
+        // 1.8–2.2 s). That race costs far less than the join flip here.
         val docs = docsSrc(s, dir)
           .select(col("doc_id"), col("source"),
             array_distinct(filter(split(cleanCol, " "), t => t =!= "")).as("ws"))
@@ -171,16 +175,16 @@ object Dedup {
         // Persisted LAZILY for the same reason as dedup_jaccard_pairs:
         // clean+shingle feeds both self-join sides and the sizes table
         // (measured 5.2 s → 3.7 s fresh at sf0.1 local[32]). Eager
-        // materialization (Tables.matPersist) REVERTED with numbers: the
-        // materialized cache's true size flips the shingle self-join to
-        // sort-merge and the (d1,d2) partial agg loses doc-locality —
-        // 11.6–16.4 s lazy vs 26.5–34.2 s eager at the 10× fixture.
+        // materialization REVERTED with numbers: the materialized cache's
+        // true size flips the shingle self-join to sort-merge and the
+        // (d1,d2) partial agg loses doc-locality — 11.6–16.4 s lazy vs
+        // 26.5–34.2 s eager at the 10× fixture.
         val docs = docsSrc(s, dir)
           .select(col("doc_id"), col("source"),
             filter(split(cleanCol, " "), t => t =!= "").as("w"))
           .filter(size(col("w")) >= 3)
           .select(col("doc_id"), col("source"),
-            graft.functions.ShingleSet(col("w")).as("sh"))
+            graft.functions.Natives.shingleSet(col("w")).as("sh"))
           .persist()
         val tok = docs.select(col("doc_id"), col("source"), explode(col("sh")).as("g"))
         val sizes = docs.select(col("doc_id"), size(col("sh")).cast("long").as("n"))
@@ -227,7 +231,7 @@ object Dedup {
     Q(
       "dedup_simhash",
       (s, dir) => {
-        // Per-row native SimHash16 (guide §2.4): the previous explode →
+        // Per-row native simHash16 (guide §2.4): the previous explode →
         // groupBy(doc_id, word) count → 16-bit-sum groupBy(doc_id) shuffled
         // the exploded token stream TWICE to regroup values already
         // co-located in the row's array. Voting ±1 per occurrence equals
@@ -239,7 +243,7 @@ object Dedup {
           .select(col("doc_id"), words.as("w"))
           .filter(size(col("w")) > 0)
           .select(col("doc_id"),
-            graft.functions.SimHash16(col("w")).as("simhash16"))
+            graft.functions.Natives.simHash16(col("w")).as("simhash16"))
           .orderBy(col("doc_id"))
       },
       Some {
@@ -278,23 +282,23 @@ object Dedup {
       (s, dir) => {
         // Persisted LAZILY: the shingle sets feed the minhash signatures AND
         // the exact rerank (`sets`) — one clean+shingle pass instead of two.
-        // Eager materialization (Tables.matPersist) REVERTED with numbers:
+        // Eager materialization REVERTED with numbers:
         // accurate IMR stats flip the rerank joins to sort-merge — 7.4–9.5 s
         // lazy vs 14.9–32.8 s eager at the 10× fixture.
         val docs = docsSrc(s, dir)
           .select(col("doc_id"),
             filter(split(cleanCol, " "), t => t =!= "").as("w"))
           .filter(size(col("w")) >= 3)
-          .select(col("doc_id"), graft.functions.ShingleSet(col("w")).as("sh"))
+          .select(col("doc_id"), graft.functions.Natives.shingleSet(col("w")).as("sh"))
           .persist()
         // 16 minhashes in ONE pass over each row's shingle array (native
-        // MinHashSig; guide §2.4): the previous explode + StrHash31 +
+        // minHashSig; guide §2.4): the previous explode + strHash31 +
         // 16-min groupBy(doc_id) shuffled O(shingles) rows only to regroup
         // values already co-located in the row. Mins are order-independent
         // exact integers over the same set → signatures bit-identical
         // (snapshot-proven); one Exchange gone from the plan.
         val sigs = docs
-          .select(col("doc_id"), graft.functions.MinHashSig(col("sh")).as("sig"))
+          .select(col("doc_id"), graft.functions.Natives.minHashSig(col("sh")).as("sig"))
         val bands = sigs.select(col("doc_id"), posexplode(array((0 until 4).map { b =>
           concat_ws(",", (0 until 4).map(r => element_at(col("sig"), 4 * b + r + 1)): _*)
         }: _*)).as(Seq("band", "key")))
@@ -308,7 +312,7 @@ object Dedup {
           .join(sets.withColumnRenamed("doc_id", "d1").withColumnRenamed("sh", "sh1"), "d1")
           .join(sets.withColumnRenamed("doc_id", "d2").withColumnRenamed("sh", "sh2"), "d2")
           .select(col("d1"), col("d2"),
-            graft.functions.SortedIntersectSize(col("sh1"), col("sh2")).as("ni"),
+            graft.functions.Natives.sortedIntersectSize(col("sh1"), col("sh2")).as("ni"),
             size(col("sh1")).cast("long").as("na"),
             size(col("sh2")).cast("long").as("nb"))
           .select(col("d1"), col("d2"),

@@ -27,11 +27,11 @@ object Similarity {
 
   /** Quantize ARRAY<FLOAT> → ARRAY<BIGINT> at 1e6 (native codegen
     * expression; semantics = transform(c, x -> floor(double(x)·1e6))). */
-  private def qCol(c: Column): Column = graft.functions.QDot.quantize(c)
+  private def qCol(c: Column): Column = graft.functions.Natives.quantize(c)
 
   /** Exact integer dot product of two quantized vectors (native codegen
     * expression; semantics = aggregate(zip_with(a, b, *), 0, +)). */
-  private def qDot(a: Column, b: Column): Column = graft.functions.QDot(a, b)
+  private def qDot(a: Column, b: Column): Column = graft.functions.Natives.qdot(a, b)
 
   private val qSql = "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))"
 
@@ -42,7 +42,7 @@ object Similarity {
     s"((($i) * 2654435761 + ($j) * 40503) % 7) - 3"
 
   /** 8-bit sign-LSH bucket of a quantized vector (exact integer math).
-    * No longer on the query path (SignLshBucket is its native form) but
+    * No longer on the query path (lshBucket is its native form) but
     * kept as the formulation of record: the equivalence test compares the
     * native expression against this, and bucketSql mirrors it. */
   private[graft] def bucketExpr(qlCol: String): String = {
@@ -152,7 +152,7 @@ object Similarity {
     Q(
       "sim_ann_lsh",
       (s, dir) => {
-        // bucket is the native SignLshBucket expression (same exact integer
+        // bucket is the native lshBucket call (same exact integer
         // math as bucketExpr above, which remains the oracle's mirror): the
         // built-in form ran 8 planes × aggregate(transform(sequence(0,63)))
         // = 512 interpreted lambda calls per row (guide §4.1 — prefer
@@ -163,7 +163,7 @@ object Similarity {
         val e = Tables.embeddings(s, dir)
           .select(col("vec_id"), qCol(col("embedding")).as("ql"))
           .withColumn("nrm", qDot(col("ql"), col("ql")))
-          .withColumn("bucket", graft.functions.QDot.lshBucket(col("ql")))
+          .withColumn("bucket", graft.functions.Natives.lshBucket(col("ql")))
         e.as("a").join(e.as("b"),
             col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
           .select(col("a.vec_id").as("v1"), col("b.vec_id").as("v2"),

@@ -84,7 +84,7 @@ object TextOps {
       .withColumn("pos", (row_number().over(w) - 1).cast("long"))
   }
 
-  /** Vocab from per-doc token ARRAYS via per-row WordTfPairs + sum — same
+  /** Vocab from per-doc token ARRAYS via per-row wordTfPairs + sum — same
     * totals as counting the exploded stream (guide §2.3, same rewrite as
     * text_wordcount: Σ over per-doc in-array counts = Σ over exploded
     * occurrences), hence the same top-V under the same (cnt DESC, word ASC)
@@ -93,7 +93,7 @@ object TextOps {
   private def vocabFromArrays(docsTok: DataFrame, v: Int = 100): DataFrame =
     vocabFromCounts(
       docsTok
-        .select(explode(graft.functions.WordTfPairs(col("w"))).as("p"))
+        .select(explode(graft.functions.Natives.wordTfPairs(col("w"))).as("p"))
         .select(col("p.word").as("word"), col("p.cnt").as("c0"))
         .groupBy(col("word")).agg(sum(col("c0")).as("cnt")), v)
 
@@ -123,7 +123,7 @@ object TextOps {
     Q(
       "text_wordcount",
       (s, dir) => docsWithTokens(s, dir)
-        .select(explode(graft.functions.WordTfPairs(col("w"))).as("p"))
+        .select(explode(graft.functions.Natives.wordTfPairs(col("w"))).as("p"))
         .select(col("p.word").as("word"), col("p.cnt").as("c0"))
         .groupBy(col("word")).agg(sum(col("c0")).as("cnt"))
         .orderBy(desc("cnt"), asc("word")),
@@ -155,7 +155,7 @@ object TextOps {
         // Bounded driver state — the top-100 vocab, the same V-bound the LDA
         // pipeline's vocabulary array and sim_ivf's query set already
         // collect. With it embedded, the per-doc position list is computable
-        // PER ROW (native VocabPositions: one hash probe per token, same as
+        // PER ROW (native vocabPositions: one hash probe per token, same as
         // the hash join's) — the explode, the broadcast hash join and the
         // groupBy(doc_id) regroup Exchange all disappear from the plan
         // (guide §2.4; equivalence in the expression's scaladoc, pinned by
@@ -164,7 +164,7 @@ object TextOps {
           .collect().toSeq.map(r => (r.getString(0), r.getLong(1)))
         docsTok
           .select(col("doc_id"),
-            graft.functions.VocabPositions(col("w"), vocab).as("ps"))
+            graft.functions.Natives.vocabPositions(col("w"), vocab).as("ps"))
           // The inner join's corpus shrink. PushDownPredicates substitutes
           // ps into the pushed filter, so the expression evaluates twice per
           // row (once for the size test, once for the projection) — two
@@ -191,7 +191,7 @@ object TextOps {
       "text_vocab_coverage",
       (s, dir) => {
         // Same shared-token persist + collected bounded vocab + per-row
-        // VocabPositions as text_doc_term. The left join kept every doc the
+        // vocabPositions as text_doc_term. The left join kept every doc the
         // explode produced (≥1 token), counting all tokens and the matched
         // ones: per row that is size(w) and size(positions).
         val docsTok = docsWithTokens(s, dir).persist()
@@ -201,7 +201,7 @@ object TextOps {
           .filter(size(col("w")) > 0) // explode dropped token-less docs
           .select(col("doc_id"),
             size(col("w")).cast("long").as("n_tokens"),
-            size(graft.functions.VocabPositions(col("w"), vocab))
+            size(graft.functions.Natives.vocabPositions(col("w"), vocab))
               .cast("long").as("n_invocab"))
           .orderBy(col("doc_id"))
       },
@@ -214,17 +214,17 @@ object TextOps {
     // basis-point integers (floor-div — see object doc). Computed on the
     // exploded token stream: the cleaning chain runs once per doc and the
     // aggregations reference only cheap attributes (multi-reference array
-    // lambdas would re-evaluate the chain per element — see ShingleSet).
+    // lambdas would re-evaluate the chain per element — see shingleSet).
     Q(
       "text_quality",
       (s, dir) => {
-        // Per-row native TokenStats (guide §2.4): the previous explode →
+        // Per-row native tokenStats (guide §2.4): the previous explode →
         // groupBy(doc_id, n_chars) conditional sums regrouped values
         // already co-located in the row. Identical integer counts over the
         // same split array; the explode + hash-agg + Exchange disappear.
         docs(s, dir).select(
             col("doc_id"), col("n_chars"),
-            graft.functions.TokenStats(
+            graft.functions.Natives.tokenStats(
               split(Cleaning.cleanText(col("text")), " "), StopWords).as("st"))
           .select(col("doc_id"), col("n_chars"),
             element_at(col("st"), 1).as("n_tokens"),
@@ -263,11 +263,11 @@ object TextOps {
     Q(
       "text_langid",
       (s, dir) => {
-        // Per-row native TokenStats — same rewrite as text_quality: the
+        // Per-row native tokenStats — same rewrite as text_quality: the
         // explode → groupBy(doc_id, lang) regroup and its Exchange go away.
         val stats = docs(s, dir).select(
             col("doc_id"), col("lang"),
-            graft.functions.TokenStats(
+            graft.functions.Natives.tokenStats(
               split(Cleaning.cleanText(col("text")), " "), StopWords).as("st"))
           .select(col("doc_id"), col("lang"),
             element_at(col("st"), 1).as("n_all"),
@@ -298,13 +298,13 @@ object TextOps {
     // (letter runs / digit runs / single other chars).
     Q(
       "text_token_count",
-      // Native TokenCounts (guide §4.1): the regex split + interpreted
+      // Native tokenCounts (guide §4.1): the regex split + interpreted
       // filter lambda + regexp_count scanned the raw text three times per
       // row with two regex engines; one code-point walk produces the
       // identical pair of counts (proof in the expression's scaladoc,
       // pinned by a ScalaCheck property against both regexes).
       (s, dir) => docs(s, dir)
-        .select(col("doc_id"), graft.functions.TokenCounts(col("text")).as("tc"))
+        .select(col("doc_id"), graft.functions.Natives.tokenCounts(col("text")).as("tc"))
         .select(col("doc_id"),
           element_at(col("tc"), 1).as("n_ws_tokens"),
           element_at(col("tc"), 2).as("n_bpe_tokens"))
@@ -322,7 +322,7 @@ object TextOps {
     // bit-stable, so the oracle checks the exact counts).
     Q(
       "text_doc_freq",
-      // Per-row WordTfPairs (guide §2.3 — aggregate before you shuffle):
+      // Per-row wordTfPairs (guide §2.3 — aggregate before you shuffle):
       // count(DISTINCT doc_id) over the exploded stream planned as an
       // Expand (2 aggregate groups per exploded row) and a two-phase
       // distinct aggregate. Emitting one (word, cnt) pair per DISTINCT
@@ -330,7 +330,7 @@ object TextOps {
       // and cf a sum of in-doc counts — same integers, one plain
       // partial+final aggregate, no Expand.
       (s, dir) => docsWithTokens(s, dir)
-        .select(explode(graft.functions.WordTfPairs(col("w"))).as("p"))
+        .select(explode(graft.functions.Natives.wordTfPairs(col("w"))).as("p"))
         .select(col("p.word").as("word"), col("p.cnt").as("cnt"))
         .groupBy(col("word"))
         .agg(count(lit(1)).as("df"), sum(col("cnt")).as("cf"))
@@ -364,7 +364,7 @@ object TextOps {
     Q(
       "text_len_hist",
       (s, dir) => {
-        // Per-row native LenHist (guide §2.4): the previous explode →
+        // Per-row native lenHist (guide §2.4): the previous explode →
         // groupBy(doc_id) with 10 conditional sums shuffled the exploded
         // stream to regroup per doc, then LEFT-joined a second documents
         // scan to restore token-less docs. The histogram is computable in
@@ -373,7 +373,7 @@ object TextOps {
         // Exchanges go away. Values oracle-identical.
         docsWithTokens(s, dir)
           .select(col("doc_id"),
-            array_join(graft.functions.LenHist(col("w")), ",").as("len_hist"))
+            array_join(graft.functions.Natives.lenHist(col("w")), ",").as("len_hist"))
           .orderBy(col("doc_id"))
       },
       Some(s"""$tokSql, d AS (
@@ -393,14 +393,14 @@ object TextOps {
       "text_len_hist_global",
       (s, dir) => {
         val a = udaf(graft.functions.ArraySumAgg)
-        // Per-row native LenHist feeding the global ArraySumAgg directly:
+        // Per-row native lenHist feeding the global ArraySumAgg directly:
         // doc_id is unique, so Σ over per-doc grouped hists = Σ over
         // per-row hists — the groupBy(doc_id) Exchange of the exploded
         // stream disappears and only the single-row global agg remains
         // (guide §2.4). Token-less docs contribute the zero vector, which
         // the previous form omitted — additive identity, same sums.
         docsWithTokens(s, dir)
-          .select(graft.functions.LenHist(col("w")).as("hist"))
+          .select(graft.functions.Natives.lenHist(col("w")).as("hist"))
           .agg(a(col("hist")).as("h"))
           .select(array_join(col("h"), ",").as("global_len_hist"))
       },
@@ -422,7 +422,7 @@ object TextOps {
     Q(
       "pipeline_curate",
       (s, dir) => {
-        // Per-row native TokenStats (guide §2.4): supersedes the r21
+        // Per-row native tokenStats (guide §2.4): supersedes the r21
         // doc_id-only re-key — the stats no longer need ANY grouping (they
         // attach to the row the clean text lives on), so the explode, the
         // hash-aggregate, the first(clean) carry and the regroup Exchange
@@ -431,7 +431,7 @@ object TextOps {
         val stats = docs(s, dir)
           .select(col("doc_id"), Cleaning.cleanText(col("text")).as("clean"))
           .select(col("doc_id"), col("clean"),
-            graft.functions.TokenStats(split(col("clean"), " "), StopWords).as("st"))
+            graft.functions.Natives.tokenStats(split(col("clean"), " "), StopWords).as("st"))
           .select(col("doc_id"), col("clean"),
             element_at(col("st"), 1).as("n_tokens"),
             element_at(col("st"), 2).as("n_stop"))
@@ -487,12 +487,12 @@ object TextOps {
         cleaned
           .select(col("doc_id"), w.as("w"),
             md5(col("clean").cast("binary")).as("doc_md5"))
-          // ShingleSet is one native expression referencing w once — the
+          // shingleSet is one native expression referencing w once — the
           // transform-over-sequence form re-evaluates w's defining chain
-          // per element after projection collapse (see ShingleSet docs).
+          // per element after projection collapse (see ShingleOps.shingles).
           .select(col("doc_id"), col("doc_md5"),
             when(size(col("w")) >= 3,
-              array_min(transform(graft.functions.ShingleSet(col("w")),
+              array_min(transform(graft.functions.Natives.shingleSet(col("w")),
                 g => md5(g.cast("binary")))))
               .otherwise(lit(null)).as("minhash1"))
           .orderBy(col("doc_id"))

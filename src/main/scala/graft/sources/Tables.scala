@@ -89,34 +89,6 @@ object Tables {
     if (parts < target) df.repartition(target) else df
   }
 
-  /** Persist `df` and MATERIALIZE it immediately (noop sink — computes every
-    * column of every row into the cache, guide §1.4), so the cache is fully
-    * built before any consumer plan runs (guide §5: materialize before
-    * reuse). Rationale: a lazily-persisted DataFrame with MULTIPLE consumer
-    * subtrees in one query (self-join sides, a broadcast-build job plus the
-    * main job) launches those consumers as CONCURRENT stages, and each
-    * task of each stage tries to compute-and-write the same cache blocks;
-    * the losers block on the per-block write locks (lock wait is charged as
-    * executor run time), and the per-row work upstream of the cache is
-    * evaluated more than once. Measured on text_doc_term at the 10×
-    * profiling fixture (8 reps, local[32]): lazy persist 7.6/2.6/2.5/3.2/
-    * 7.7/8.1/7.0/2.2 s (bimodal — whichever job wins the race), eager
-    * materialization 2.2/1.8/1.9/1.8/1.9/2.0/2.0/1.8 s. The materialization
-    * runs inside the caller's (timed) query invocation and is dropped by
-    * the Catalog cache-hygiene contract; nothing persists across runs.
-    * Results are unchanged — this only serializes cache construction.
-    * Currently unreferenced from query code: the two queries this fixed
-    * (text_doc_term / text_vocab_coverage) later moved to a collected
-    * bounded vocab + per-row VocabPositions, whose collect materializes
-    * the cache sequentially anyway; kept as the documented fix for the
-    * race pattern (the dedup operators' lazy persists cite it, with the
-    * measured reasons eager materialization is WRONG for them). */
-  def matPersist(df: DataFrame): DataFrame = {
-    val p = df.persist()
-    p.write.format("noop").mode("overwrite").save()
-    p
-  }
-
   /** CSV reader with an explicit schema — never infer in production paths
     * (SURVEY.md §1.3). Quote-aware: fixes the reference's naive split(',')
     * (LDATopicModelingWithGibbs.py:31) which breaks on text containing commas.

@@ -3,9 +3,8 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Minimal bridge to the private[sql] Column↔Expression converters, so the
-  * engine's native Catalyst expressions (e.g. graft.functions
-  * .EmojiStripTokens) can be used as Columns with ANY SparkSession — no
-  * session-level registration required. This is the only place the engine
+  * engine's native calls (graft.functions.Natives) can be used as Columns
+  * with ANY SparkSession — no session-level registration required. This is the only place the engine
   * reaches past the public API, and it delegates straight to Spark's own
   * converters. */
 object GraftColumnBridge {

@@ -1,12 +1,16 @@
 package graft
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{array_join, col, filter, split}
 import graft.functions.Cleaning
+import graft.functions.Cleaning.{collapseWhitespace, keepAlphaWhitespace,
+  removeUrls, removeUsernames, removeWords, toLower}
 
 /** F1–F7 semantics (SURVEY §2.3) on handwritten strings, including the
   * order-of-application traps in SURVEY §7.5.5. */
 class CleaningSpec extends SparkSpec {
   import spark.implicits._
+  import CleaningSpec._
 
   private def clean(s: String): String =
     Seq(s).toDF("text").select(Cleaning.cleanText(col("text")).as("c"))
@@ -64,7 +68,7 @@ class CleaningSpec extends SparkSpec {
     val df = cases.toDF("text")
     val out = df.select(
       Cleaning.cleanText(col("text")).as("native"),
-      Cleaning.cleanTextBuiltins(col("text")).as("builtins")).collect()
+      cleanTextBuiltins(col("text")).as("builtins")).collect()
     out.zip(cases).foreach { case (r, in) =>
       assert(r.getString(0) == r.getString(1), s"mismatch for input '$in'")
     }
@@ -87,7 +91,7 @@ class CleaningSpec extends SparkSpec {
     val df = cases.toDF("text")
     val out = df.select(
       Cleaning.removeEmojiTokens(col("text")).as("native"),
-      Cleaning.removeEmojiTokensHof(col("text")).as("hof")).collect()
+      removeEmojiTokensHof(col("text")).as("hof")).collect()
     out.zip(cases).foreach { case (r, in) =>
       assert(r.getString(0) == r.getString(1), s"mismatch for input '$in'")
     }
@@ -104,4 +108,26 @@ class CleaningSpec extends SparkSpec {
     assert(r.getLong(1) == 31L)
     assert(r.getSeq[Long](2) == Seq(500000L, -1250000L))
   }
+}
+
+/** Built-in-only reference forms the native cleaning calls are compared
+  * against. */
+object CleaningSpec {
+
+  /** F1's emoji codepoint class, the ranges EmojiOps.isEmoji mirrors. */
+  val EmojiClass =
+    "[\\x{1F300}-\\x{1FAFF}\\x{2600}-\\x{27BF}\\x{1F000}-\\x{1F02F}" +
+      "\\x{1F0A0}-\\x{1F0FF}\\x{1F100}-\\x{1F1FF}\\x{1F200}-\\x{1F2FF}" +
+      "\\x{2190}-\\x{21FF}\\x{2B00}-\\x{2BFF}\\x{FE00}-\\x{FE0F}\\x{200D}]"
+
+  /** F1 as a higher-order `filter` over `split`, dropping the whole token. */
+  def removeEmojiTokensHof(c: Column): Column =
+    array_join(
+      filter(split(c, "\\s+"), t => !(t rlike EmojiClass)),
+      " ")
+
+  /** The F1→F7 composition of built-ins only. */
+  def cleanTextBuiltins(c: Column): Column =
+    toLower(collapseWhitespace(keepAlphaWhitespace(
+      removeWords(removeUsernames(removeUrls(removeEmojiTokensHof(c)))))))
 }

@@ -92,14 +92,14 @@ class OperatorsSpec extends SparkSpec {
     // the real fixture vectors plus edge shapes: short array (null-index
     // semantics -> bucket 0), zeros, extremes
     val fixture = graft.sources.Tables.embeddings(spark, sf0001)
-      .select(graft.functions.QDot.quantize(col("embedding")).as("ql"))
+      .select(graft.functions.Natives.quantize(col("embedding")).as("ql"))
     val edges = Seq(
       Seq.fill(64)(0L), Seq.fill(64)(1000000L), Seq.fill(64)(-1000000L),
       Seq.tabulate(64)(i => (i - 32).toLong * 123457L)
     ).toDF("ql")
     Seq(fixture, edges).foreach { df =>
       val out = df.select(
-        graft.functions.QDot.lshBucket(col("ql")).as("native"),
+        graft.functions.Natives.lshBucket(col("ql")).as("native"),
         expr(graft.operators.Similarity.bucketExpr("ql")).cast("long").as("builtin"))
         .collect()
       assert(out.nonEmpty)
@@ -110,7 +110,7 @@ class OperatorsSpec extends SparkSpec {
     // the native expression defines it as bucket 0 (the builtin form would
     // raise under ANSI element access).
     val short = Seq(Seq(1L, 2L, 3L)).toDF("ql")
-      .select(graft.functions.QDot.lshBucket(col("ql"))).collect()
+      .select(graft.functions.Natives.lshBucket(col("ql"))).collect()
     assert(short.head.getLong(0) == 0L)
   }
 
