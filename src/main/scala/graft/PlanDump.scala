@@ -9,11 +9,12 @@ object PlanDump {
     val spark = GraftSession(8)
     names.foreach { n =>
       println(s"===== $n =====")
-      val df = Catalog.byName(n).run(spark, sfDir)
-      df.explain("formatted")
-      val t0 = System.nanoTime()
-      val c = df.count()
-      println(f"[plandump] $n rows=$c time=${(System.nanoTime() - t0) / 1e9}%.2f s")
+      Catalog.runAndClear(spark, sfDir, n) { df =>
+        df.explain("formatted")
+        val t0 = System.nanoTime()
+        val c = df.count()
+        println(f"[plandump] $n rows=$c time=${(System.nanoTime() - t0) / 1e9}%.2f s")
+      }
     }
     spark.stop()
   }

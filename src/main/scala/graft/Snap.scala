@@ -18,12 +18,11 @@ object Snap {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = GraftSession(cpus)
     names.foreach { n =>
-      val out = Catalog.byName(n).run(spark, sfDir)
-        .collect().map(_.toString).mkString("\n")
+      val out = Catalog.runAndClear(spark, sfDir, n)(_.collect())
+        .map(_.toString).mkString("\n")
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"${prefix}_$n.txt"), out)
       System.err.println(s"[snap] $n")
-      spark.sharedState.cacheManager.clearCache()
     }
     spark.stop()
   }

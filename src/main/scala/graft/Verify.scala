@@ -8,20 +8,16 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = GraftSession(cpus)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
       val t0 = System.nanoTime()
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        Catalog.runAndClear(spark, sfDir, name)(_.coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name"))
         System.err.println(
           f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1f s")
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Queries may persist() intermediates for intra-query reuse; drop them
-      // so each query computes from parquet and cached blocks don't pile up
-      // across the 50+ query dump.
-      spark.sharedState.cacheManager.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

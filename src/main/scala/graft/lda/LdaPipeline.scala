@@ -1,6 +1,6 @@
 package graft.lda
 
-import org.apache.spark.ml.clustering.LDA
+import org.apache.spark.ml.clustering.{LDA, LDAModel}
 import org.apache.spark.ml.feature.{CountVectorizer, CountVectorizerModel, RegexTokenizer, StopWordsRemover}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -45,26 +45,30 @@ object LdaPipeline {
       // matching the reference's inner-join corpus shrink (py:75,93; SURVEY §7.5.2)
   }
 
-  /** θ per document (M2's doc-topic state, kept distributed): doc_id, the
-    * argmax topic, and the topic weight — the reference collects θ to the
-    * driver (py:155); here it stays a DataFrame. */
-  def docTopics(spark: SparkSession, dir: String, vocabSize: Int,
-      numTopics: Int, maxIter: Int, seed: Long = 42L): DataFrame = {
+  /** The fit both outputs share: preprocess → persist → CountVectorizer
+    * (top-V vocabulary) → encode → LDA(T topics, α = β = 1/T, the reference's
+    * coupling, py:98-100; SURVEY §7.5.6). Returns the persisted preprocessed
+    * docs (the caller unpersists them), the vocabulary model, the encoded
+    * docs and the fitted model. */
+  private def fit(spark: SparkSession, dir: String, vocabSize: Int, numTopics: Int,
+      maxIter: Int, seed: Long): (DataFrame, CountVectorizerModel, DataFrame, LDAModel) = {
     val docs = preprocess(Tables.documents(spark, dir)).persist()
     val cvModel = new CountVectorizer()
       .setInputCol("tokens").setOutputCol("features")
       .setVocabSize(vocabSize)
       .fit(docs)
-    // Do NOT persist the encoded DataFrame (r21 did; reverted r22):
-    // ml.LDA.fit caches its converted RDD[(id, Vector)] itself (MEMORY_AND_DISK,
-    // "training instances") — but ONLY when the input dataset's storageLevel is
-    // NONE. A DF-level persist here defeats that, and the online optimizer's
-    // ~2 jobs/iteration then re-run the DF→RDD row conversion from the DF
-    // cache every iteration (the "input data is not directly cached" WARN in
-    // the r21 driver bench tail). Leaving it uncached lets the fit iterate
-    // over plain cached (id, Vector) objects; the transform below re-derives
-    // encoded from the cached `docs` once (one cheap CountVectorizer map).
-    // Same values, same partitioning, so the seeded fit is unchanged.
+    // Do NOT persist the encoded DataFrame (r21 did, measuring fit 7.4→3.5 s
+    // vs nothing cached; reverted r22 for something strictly better):
+    // ml.LDA.fit RDD-persists its converted input itself (MEMORY_AND_DISK,
+    // "training instances") — but ONLY when dataset.storageLevel is NONE, so
+    // the r21 DF persist suppressed it and every optimizer iteration (~2
+    // jobs each) re-ran the DF→RDD row conversion from the DF cache (the
+    // "input data is not directly cached" WARN in the r21 driver bench
+    // tail). With the DF left uncached the fit reads plain (id, Vector)
+    // objects from the RDD cache and unpersists it itself; a later use of
+    // `encoded` re-derives it from the cached `docs` (one cheap
+    // CountVectorizer map). Same values, same partitioning → identical
+    // seeded fit (snapshot-proven bit-identical at sf0.001/0.01/0.1).
     val encoded = cvModel.transform(docs)
     val model = new LDA()
       .setK(numTopics).setMaxIter(maxIter).setSeed(seed)
@@ -72,6 +76,15 @@ object LdaPipeline {
       .setTopicConcentration(1.0 / numTopics)
       .setFeaturesCol("features")
       .fit(encoded)
+    (docs, cvModel, encoded, model)
+  }
+
+  /** θ per document (M2's doc-topic state, kept distributed): doc_id, the
+    * argmax topic, and the topic weight — the reference collects θ to the
+    * driver (py:155); here it stays a DataFrame. */
+  def docTopics(spark: SparkSession, dir: String, vocabSize: Int,
+      numTopics: Int, maxIter: Int, seed: Long = 42L): DataFrame = {
+    val (docs, _, encoded, model) = fit(spark, dir, vocabSize, numTopics, maxIter, seed)
     // Fan out the TRANSFORM input only (guide §2.2): the single-row-group
     // fixture leaves `encoded` with one partition, so the per-doc variational
     // inference (the most expensive per-row compute in the repo) and the
@@ -112,32 +125,7 @@ object LdaPipeline {
     * flat word list per topic (py:199-203). */
   def topicReport(spark: SparkSession, dir: String, vocabSize: Int,
       numTopics: Int, maxIter: Int, topWords: Int = 20, seed: Long = 42L): DataFrame = {
-    val docs = preprocess(Tables.documents(spark, dir)).persist()
-    val cvModel: CountVectorizerModel = new CountVectorizer()
-      .setInputCol("tokens").setOutputCol("features")
-      .setVocabSize(vocabSize)
-      .fit(docs)
-    // Do NOT persist the encoded DataFrame (r21 did, measuring fit 7.4→3.5 s
-    // vs nothing cached; reverted r22 for something strictly better):
-    // ml.LDA.fit RDD-persists its converted input itself (MEMORY_AND_DISK,
-    // "training instances") — but ONLY when dataset.storageLevel is NONE, so
-    // the r21 DF persist suppressed it and every optimizer iteration re-ran
-    // the DF→RDD row conversion from the DF cache (the "input data is not
-    // directly cached" WARN in the r21 driver bench tail). With the DF left
-    // uncached the ~2 jobs/iteration read plain (id, Vector) objects from the
-    // RDD cache. Same values, same partitioning → identical seeded fit
-    // (snapshot-proven bit-identical at sf0.001/0.01/0.1).
-    val encoded = cvModel.transform(docs)
-      .filter(col("features").isNotNull)
-    val lda = new LDA()
-      .setK(numTopics)
-      .setMaxIter(maxIter)
-      .setSeed(seed)
-      // α = β = 1/T — the reference's coupling (py:98-100; SURVEY §7.5.6)
-      .setDocConcentration(1.0 / numTopics)
-      .setTopicConcentration(1.0 / numTopics)
-      .setFeaturesCol("features")
-    val model = lda.fit(encoded) // fit unpersists its internal RDD cache itself
+    val (docs, cvModel, _, model) = fit(spark, dir, vocabSize, numTopics, maxIter, seed)
     docs.unpersist()
     // describeTopics = the reference's driver-side argsort top-20 (py:196-203),
     // resolved against the vocabulary (J2's driver-side lookup, py:192-194).

@@ -25,9 +25,6 @@ object BinaryOps {
     * byte_len). The cast is the ingest boundary — everything downstream
     * treats payload as opaque bytes. */
   def mediaTable(s: SparkSession, dir: String): DataFrame =
-    // fanOut measured 2.5x SLOWER on mm_payload_meta (0.58 vs 0.22 s) and
-    // neutral on mm_frame_sample — the narrow projections are too cheap per
-    // row to recoup the round-robin shuffle; keep the direct scan.
     Tables.documents(s, dir).select(
       col("doc_id"),
       col("text").cast("binary").as("payload"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Q
@@ -27,11 +27,6 @@ object Dedup {
 
   private def cleanCol: Column = Cleaning.cleanText(col("text"))
 
-  /** documents scan fanned out to every core (guide §2.2: the single-row-
-    * group fixture plans as ONE scan task, serializing the regex chain). */
-  private def docsSrc(s: SparkSession, dir: String): DataFrame =
-    Tables.fanOut(Tables.documents(s, dir), s"$dir/documents")
-
   /** Shared oracle mirror of the cleaning chain (see Cleaning.CleanTextSql). */
   private val cleanSql: String = Cleaning.CleanTextSql
 
@@ -49,7 +44,7 @@ object Dedup {
       "dedup_exact",
       (s, dir) => {
         val w = Window.partitionBy(col("doc_md5"))
-        docsSrc(s, dir)
+        Tables.documents(s, dir)
           .select(col("doc_id"), md5(cleanCol.cast("binary")).as("doc_md5"))
           .withColumn("canonical_id", min(col("doc_id")).over(w))
           .withColumn("is_dup", (col("doc_id") =!= col("canonical_id")).cast("int"))
@@ -69,7 +64,7 @@ object Dedup {
         // Persist the cleaned text: the three fingerprints below each
         // reference it (CollapseProject would inline the 8-regex chain into
         // all three, running it 3× per doc — guide §2.4 / §5).
-        val cleaned = docsSrc(s, dir)
+        val cleaned = Tables.documents(s, dir)
           .select(cleanCol.as("clean"))
           .persist()
         val words = filter(split(col("clean"), " "), t => t =!= "")
@@ -124,7 +119,7 @@ object Dedup {
         // contend for the same cache blocks' write locks (text_doc_term at
         // the 10× fixture, local[32]: lazy 2.2–8.1 s bimodal, eager
         // 1.8–2.2 s). That race costs far less than the join flip here.
-        val docs = docsSrc(s, dir)
+        val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("source"),
             array_distinct(filter(split(cleanCol, " "), t => t =!= "")).as("ws"))
           .persist()
@@ -179,7 +174,7 @@ object Dedup {
         // true size flips the shingle self-join to sort-merge and the
         // (d1,d2) partial agg loses doc-locality — 11.6–16.4 s lazy vs
         // 26.5–34.2 s eager at the 10× fixture.
-        val docs = docsSrc(s, dir)
+        val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("source"),
             filter(split(cleanCol, " "), t => t =!= "").as("w"))
           .filter(size(col("w")) >= 3)
@@ -239,7 +234,7 @@ object Dedup {
         // bit-identical (oracle-checked) and both Exchanges vanish. The
         // size filter replicates explode's drop of token-less docs.
         val words = filter(split(cleanCol, " "), t => t =!= "")
-        docsSrc(s, dir)
+        Tables.documents(s, dir)
           .select(col("doc_id"), words.as("w"))
           .filter(size(col("w")) > 0)
           .select(col("doc_id"),
@@ -285,7 +280,7 @@ object Dedup {
         // Eager materialization REVERTED with numbers:
         // accurate IMR stats flip the rerank joins to sort-merge — 7.4–9.5 s
         // lazy vs 14.9–32.8 s eager at the 10× fixture.
-        val docs = docsSrc(s, dir)
+        val docs = Tables.documents(s, dir)
           .select(col("doc_id"),
             filter(split(cleanCol, " "), t => t =!= "").as("w"))
           .filter(size(col("w")) >= 3)

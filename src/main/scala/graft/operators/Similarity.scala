@@ -156,10 +156,7 @@ object Similarity {
         // math as bucketExpr above, which remains the oracle's mirror): the
         // built-in form ran 8 planes × aggregate(transform(sequence(0,63)))
         // = 512 interpreted lambda calls per row (guide §4.1 — prefer
-        // codegen'd expressions in the hot path). With the bucket native,
-        // the r21 fanOut no longer pays (0.56 s plain vs 0.79 fanned median
-        // at sf0.1; 10× fixture scans arrive ≥ cores partitions anyway), so
-        // the scan is direct again — one less Exchange.
+        // codegen'd expressions in the hot path).
         val e = Tables.embeddings(s, dir)
           .select(col("vec_id"), qCol(col("embedding")).as("ql"))
           .withColumn("nrm", qDot(col("ql"), col("ql")))

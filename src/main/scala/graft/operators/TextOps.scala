@@ -44,13 +44,8 @@ object TextOps {
     filter(split(Cleaning.cleanText(col("text")), " "),
       t => !array_contains(swArray, t) && t =!= "")
 
-  /** documents scan fanned out to every core (guide §2.2: the single-row-
-    * group fixture plans as ONE scan task, serializing the regex chain). */
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    Tables.fanOut(Tables.documents(s, dir), s"$dir/documents")
-
   private def docsWithTokens(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir).select(col("doc_id"), tokensCol.as("w"))
+    Tables.documents(s, dir).select(col("doc_id"), tokensCol.as("w"))
 
   /** doc_id, word — the exploded token stream (E2). */
   private def tokenStream(s: SparkSession, dir: String): DataFrame =
@@ -105,7 +100,7 @@ object TextOps {
     // ---- F1–F7: the composed cleaning chain (ExtractTwitterData.py:158-164).
     Q(
       "text_clean",
-      (s, dir) => docs(s, dir)
+      (s, dir) => Tables.documents(s, dir)
         .select(col("doc_id"), Cleaning.cleanText(col("text")).as("clean"))
         .orderBy(col("doc_id")),
       Some(s"""SELECT doc_id, $cleanSql AS clean
@@ -222,7 +217,7 @@ object TextOps {
         // groupBy(doc_id, n_chars) conditional sums regrouped values
         // already co-located in the row. Identical integer counts over the
         // same split array; the explode + hash-agg + Exchange disappear.
-        docs(s, dir).select(
+        Tables.documents(s, dir).select(
             col("doc_id"), col("n_chars"),
             graft.functions.Natives.tokenStats(
               split(Cleaning.cleanText(col("text")), " "), StopWords).as("st"))
@@ -265,7 +260,7 @@ object TextOps {
       (s, dir) => {
         // Per-row native tokenStats — same rewrite as text_quality: the
         // explode → groupBy(doc_id, lang) regroup and its Exchange go away.
-        val stats = docs(s, dir).select(
+        val stats = Tables.documents(s, dir).select(
             col("doc_id"), col("lang"),
             graft.functions.Natives.tokenStats(
               split(Cleaning.cleanText(col("text")), " "), StopWords).as("st"))
@@ -303,7 +298,7 @@ object TextOps {
       // row with two regex engines; one code-point walk produces the
       // identical pair of counts (proof in the expression's scaladoc,
       // pinned by a ScalaCheck property against both regexes).
-      (s, dir) => docs(s, dir)
+      (s, dir) => Tables.documents(s, dir)
         .select(col("doc_id"), graft.functions.Natives.tokenCounts(col("text")).as("tc"))
         .select(col("doc_id"),
           element_at(col("tc"), 1).as("n_ws_tokens"),
@@ -428,7 +423,7 @@ object TextOps {
         // hash-aggregate, the first(clean) carry and the regroup Exchange
         // all disappear. CollapseProject will not inline the non-cheap
         // clean chain into both uses, so it still runs once per row.
-        val stats = docs(s, dir)
+        val stats = Tables.documents(s, dir)
           .select(col("doc_id"), Cleaning.cleanText(col("text")).as("clean"))
           .select(col("doc_id"), col("clean"),
             graft.functions.Natives.tokenStats(split(col("clean"), " "), StopWords).as("st"))
@@ -480,7 +475,7 @@ object TextOps {
         // Persist the cleaned text: both `w` and `doc_md5` reference it, and
         // CollapseProject would inline the 8-regex chain into each use,
         // running it 2× per doc (guide §2.4 / §5).
-        val cleaned = docs(s, dir)
+        val cleaned = Tables.documents(s, dir)
           .select(col("doc_id"), Cleaning.cleanText(col("text")).as("clean"))
           .persist()
         val w = filter(split(col("clean"), " "), t => t =!= "")

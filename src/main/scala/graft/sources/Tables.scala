@@ -55,40 +55,6 @@ object Tables {
   def documents(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")
 
-  /** Fan a narrow scan out to every core (optimization guide §2.2/§2.7 —
-    * parallelism and stragglers). The fixtures are single-file, single-row-
-    * group parquet, so a scan plans as ONE task and everything fused into it
-    * (the 8-regex cleaning chain, quantization, partial aggregation) runs on
-    * one core while the rest idle. When the scan has fewer partitions than
-    * the session's default parallelism, redistribute rows round-robin; the
-    * shuffle ships only the pruned columns (ColumnPruning pushes through
-    * Repartition) and buys cores× parallel per-row compute. SCALE-ADAPTIVE,
-    * not a local[32] constant: at production scale a table has ≥ cores row
-    * groups, the condition is false, and this is a no-op — no shuffle is
-    * ever added to a well-partitioned input. Row multiset is unchanged, so
-    * every declarative result is identical; do NOT use under seeded ML fits
-    * whose sampling depends on partitioning (LDA minibatches, KMeans init).
-    */
-  def fanOut(df: DataFrame): DataFrame = fanOut(df, null)
-
-  /** Scan partition counts per (session, key): `df.rdd` forces a full
-    * physical-plan/RDD conversion (plus datasource file listing), so without
-    * this memo every build of every fanned query planned its scan twice
-    * (ADVICE r21). The count is stable within a session — it is a pure
-    * function of the immutable fixture file and session confs. */
-  private val scanParts =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), Int]
-
-  def fanOut(df: DataFrame, cacheKey: String): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    val parts =
-      if (cacheKey == null) df.rdd.getNumPartitions
-      else scanParts.computeIfAbsent(
-        (System.identityHashCode(df.sparkSession), cacheKey),
-        _ => df.rdd.getNumPartitions)
-    if (parts < target) df.repartition(target) else df
-  }
-
   /** CSV reader with an explicit schema — never infer in production paths
     * (SURVEY.md §1.3). Quote-aware: fixes the reference's naive split(',')
     * (LDATopicModelingWithGibbs.py:31) which breaks on text containing commas.
